@@ -9,8 +9,14 @@ Incremental semantics (SURVEY §2.10) live entirely in the table state:
 - T3 backfill sweep      → just re-run the job (same predicate finds
   whatever was missed); ``run_until_drained`` is the 6-hour sweep
 - T4 TTL refresh         → staleness disjunct in the relate predicate
+  (``RELATED_TTL_DAYS``)
 - T5 threshold gate      → ``min_eligible`` guard
 - T6 bounded batches     → ``batch_size`` limit with a total sort order
+
+Every stage shares three decisions, each made once here: the work-list
+order (:func:`_work_list`), the count phase that persists a batch and
+collects its partition tuples (:func:`_materialize`), and the articles
+write-back (:func:`_update_articles`, run by :func:`_merge_batch`).
 
 The reference processed one article per OS process (definitions.py:83-86);
 here one job invocation processes a whole batch as a single DataFrame DAG
@@ -22,7 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from briefly_spark.functions.vectors import mean_pool
@@ -46,6 +52,14 @@ PARTITION = ["source"]
 #: minimum content length (models/article.py:68-73)
 MIN_CONTENT_CHARS = 20
 
+#: embedding width — embed writes vectors of it and relate scores them
+#: with it, so the two stages must agree
+EMBED_DIMS = 16
+#: related articles kept per article
+RELATED_K = 5
+#: age after which an article's related_ids are recomputed (T4)
+RELATED_TTL_DAYS = 1
+
 
 @dataclass
 class JobResult:
@@ -53,14 +67,35 @@ class JobResult:
     processed: int
 
 
-def _materialize(batch: DataFrame, partition_by: list[str]) -> tuple[DataFrame, list, int]:
-    """The count phase of :func:`_merge_batch`, separable so the drain loop
-    can run it AHEAD on a driver thread (guide §2.6): persist the batch and
-    run its did-we-find-work count as a groupBy over the partition columns,
-    returning (persisted batch, partition-tuple rows, n)."""
+#: a work batch after its count phase: (persisted batch, partition-tuple
+#: rows with their counts, total row count)
+Counted = tuple[DataFrame, list, int]
+
+
+def _materialize(batch: DataFrame) -> Counted:
+    """The count phase of every stage: persist the batch and run its
+    did-we-find-work count as a groupBy over :data:`PARTITION`, so the
+    batch's distinct partition tuples come back from the SAME action and
+    the partition-scoped merge (``partition_rows=``) skips its own
+    distinct+collect job.  The tuple count is bounded by the batch, so the
+    driver-side result stays as bounded as a plain count.  Batches are
+    bounded (by ``batch_size``, or the caller's ingest slice), so
+    persistence is safe at any table size; the batch is unpersisted again
+    if the count fails."""
     batch.persist()
-    rows = batch.groupBy(*partition_by).count().collect()
+    try:
+        rows = batch.groupBy(*PARTITION).count().collect()
+    except BaseException:
+        batch.unpersist()
+        raise
     return batch, rows, sum(r["count"] for r in rows)
+
+
+#: The stages' own count phase.  The drain loop's prefetch threads call
+#: :func:`_materialize` through its module global, so a caller that
+#: replaces that global (a tracer, a fault-injecting test) reaches the
+#: ahead-of-time path alone and a stage's own recompute stays intact.
+_count_phase = _materialize
 
 
 class _Prefetch:
@@ -73,13 +108,14 @@ class _Prefetch:
     consumer joins it — via the ``barrier`` hook of :func:`_merge_batch` —
     before any merge swaps a table the thread reads, so no read ever races
     a partition rename.  A prefetch that fails for any reason degrades to
-    the sequential path (``get()`` returns None and the stage recomputes
+    the sequential path (``take()`` returns None and the stage recomputes
     its batch — same rows by the work-lists' total order)."""
 
     def __init__(self, fn):
         from pyspark import InheritableThread
 
         self._result = None
+        self._taken = False
 
         def run():
             try:
@@ -93,74 +129,74 @@ class _Prefetch:
     def join(self) -> None:
         self._thread.join()
 
-    def get(self):
+    def take(self):
+        """Join and hand the batch to the consuming stage, which then owns
+        (and unpersists) it."""
         self.join()
-        return self._result
+        self._taken = True
+        result, self._result = self._result, None
+        return result
 
     def discard(self) -> None:
-        """Drop an unconsumed prefetch (the drain converged first)."""
-        got = self.get()
-        if got is not None:
-            got[0].unpersist()
+        """Drop the batch unless a stage took it (the drain converged, or a
+        stage raised, first)."""
+        if not self._taken:
+            got = self.take()
+            if got is not None:
+                got[0].unpersist()
 
 
-def _merge_batch(
-    batch: DataFrame,
-    merge,
-    partition_by: list[str] | None = None,
-    *,
-    precounted: tuple[DataFrame, list, int] | None = None,
-    barrier=None,
-) -> int:
-    """Materialize a work batch ONCE across its two actions: every job ends
-    with ``count()`` (did we find work?) followed by a keyed merge — without
-    a persist the whole work-list lineage (scan → filter → sort → limit →
-    transform) is evaluated twice per job.  Batches are bounded (by
-    ``batch_size``, or the caller's ingest slice), so persistence is safe
-    at any table size.
-
-    With ``partition_by``, the did-we-find-work count runs as a groupBy
-    over exactly those columns, so the batch's distinct partition tuples
-    come back from the SAME action and are handed to ``merge`` as its
-    second argument — the storage layer's partition-scoped paths
-    (``partition_rows=``) then skip their own distinct+collect job, one
-    whole Spark action per merge.  The tuple count is bounded by the
-    batch (the grouped count is never wider than the rows it counts), so
-    the driver-side result stays as bounded as the count it replaces.
-
-    ``precounted`` hands in a batch whose count phase already ran (a
-    :class:`_Prefetch` result, same (batch, rows, n) shape as
-    :func:`_materialize`).  ``barrier`` is invoked right before ``merge``
-    — the drain loop passes the pending prefetch's ``join`` so a
-    concurrent read never races this merge's partition swap."""
-    if precounted is not None:
-        batch, rows, n = precounted
-        try:
-            if n:
-                if barrier is not None:
-                    barrier()
-                merge(batch, rows)
-        finally:
-            batch.unpersist()
-        return n
-    batch.persist()
+def _merge_batch(counted: Counted, write, barrier=None) -> int:
+    """Write back a counted batch (:func:`_materialize`'s triple) when it
+    holds work, then release it.  ``write`` gets the batch and its
+    partition tuples.  ``barrier`` is invoked right before ``write`` — the
+    drain loop passes the pending prefetch's ``join`` so a concurrent read
+    never races this merge's partition swap."""
+    batch, rows, n = counted
     try:
-        if partition_by is None:
-            n = batch.count()
-            if n:
-                if barrier is not None:
-                    barrier()
-                merge(batch, None)
-        else:
-            rows = batch.groupBy(*partition_by).count().collect()
-            n = sum(r["count"] for r in rows)
-            if n:
-                if barrier is not None:
-                    barrier()
-                merge(batch, rows)
+        if n:
+            if barrier is not None:
+                barrier()
+            write(batch, rows)
     finally:
         batch.unpersist()
     return n
+
+
+def _update_articles(wh: Warehouse, cols: list[str]):
+    """The articles write-back every enrichment stage shares: a keyed
+    (``url``), partition-scoped (:data:`PARTITION`) update of ``cols``,
+    handed the partition tuples of the count phase."""
+
+    def write(delta: DataFrame, partition_rows) -> None:
+        wh.merge_update(
+            delta, ARTICLES, ["url"], cols,
+            partition_by=PARTITION, partition_rows=partition_rows,
+        )
+
+    return write
+
+
+def _work_barrier(work: DataFrame) -> DataFrame:
+    """Repartition a bounded work-list before its heavy transform: (a) a
+    HOF lambda capturing a projected column would otherwise defeat the
+    TakeOrderedAndProject limit and degrade to a global Sort (plan-probed
+    on q62), and (b) the batch's per-row model/transform work spreads
+    across the cluster instead of running in the limit's partition."""
+    return work.repartition(work.sparkSession.sparkContext.defaultParallelism)
+
+
+def _work_list(articles: DataFrame, predicate: Column, batch_size: int) -> DataFrame:
+    """The bounded work-list of summarize, tts, embed and relate: the
+    articles matching ``predicate``, longest first, in the TOTAL order
+    (desc n_chars, asc url).  The drain loop's prefetch relies on that
+    order: a batch recomputed after a failed prefetch selects the same
+    rows the prefetch would have."""
+    return _work_barrier(
+        articles.filter(predicate)
+        .orderBy(F.desc("n_chars"), F.asc("url"))
+        .limit(batch_size)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -212,11 +248,10 @@ def ingest_documents(wh: Warehouse, docs: DataFrame) -> JobResult:
         existing = wh.read(ARTICLES).select("url")
         batch = batch.join(existing, "url", "left_anti")
     n = _merge_batch(
-        batch,
+        _count_phase(batch),
         lambda b, pr: wh.merge_upsert(
             b, ARTICLES, ["url"], partition_by=PARTITION, partition_rows=pr
         ),
-        partition_by=PARTITION,
     )
     return JobResult("ingest", n)
 
@@ -224,26 +259,12 @@ def ingest_documents(wh: Warehouse, docs: DataFrame) -> JobResult:
 # ---------------------------------------------------------------------------
 # summarize + fact-check (§3.2)
 # ---------------------------------------------------------------------------
-def _work_barrier(work: DataFrame) -> DataFrame:
-    """Repartition a bounded work-list before its heavy transform: (a) a
-    HOF lambda capturing a projected column would otherwise defeat the
-    TakeOrderedAndProject limit and degrade to a global Sort (plan-probed
-    on q62), and (b) the batch's per-row model/transform work spreads
-    across the cluster instead of running in the limit's partition."""
-    return work.repartition(work.sparkSession.sparkContext.defaultParallelism)
-
-
 def _summarize_delta(wh: Warehouse, batch_size: int) -> DataFrame:
     """summarize's work-list + per-row transform, as a lazy frame.  Reads
     ONLY columns no other stage's merge writes (url/source/content/n_chars
     + the summary_status predicate), which is what makes it safe to
     materialize concurrently with curate's merge (see run_until_drained)."""
-    articles = wh.read(ARTICLES)
-    work = _work_barrier(
-        articles.filter(F.col("summary_status").isNull())
-        .orderBy(F.desc("n_chars"), F.asc("url"))
-        .limit(batch_size)
-    )
+    work = _work_list(wh.read(ARTICLES), F.col("summary_status").isNull(), batch_size)
     return work.select(
         "url",
         "source",
@@ -258,18 +279,11 @@ def summarize_batch(
 ) -> JobResult:
     """Work-list P2 (no summary) → M5/M6 stubs → single K3 merge of
     {summary, summary_status, validation_score}."""
+    if precounted is None:
+        precounted = _count_phase(_summarize_delta(wh, batch_size))
     n = _merge_batch(
-        _summarize_delta(wh, batch_size) if precounted is None else None,
-        lambda d, pr: wh.merge_update(
-            d,
-            ARTICLES,
-            ["url"],
-            ["summary", "summary_status", "validation_score"],
-            partition_by=PARTITION,
-            partition_rows=pr,
-        ),
-        partition_by=PARTITION,
-        precounted=precounted,
+        precounted,
+        _update_articles(wh, ["summary", "summary_status", "validation_score"]),
     )
     return JobResult("summarize", n)
 
@@ -381,16 +395,10 @@ def curate_batch(
         )
         try:
             n = _merge_batch(
-                delta,
-                lambda d, pr: wh.merge_update(
-                    d,
-                    ARTICLES,
-                    ["url"],
-                    ["curated_content", "curated_status", "n_spans_trimmed"],
-                    partition_by=PARTITION,
-                    partition_rows=pr,
+                _count_phase(delta),
+                _update_articles(
+                    wh, ["curated_content", "curated_status", "n_spans_trimmed"]
                 ),
-                partition_by=PARTITION,
                 barrier=barrier,
             )
         finally:
@@ -404,34 +412,29 @@ def curate_batch(
 # ---------------------------------------------------------------------------
 # embed (§2.9 M3 + §2.5 A5 + K5)
 # ---------------------------------------------------------------------------
-def _embed_delta(wh: Warehouse, batch_size: int, dims: int = 16) -> DataFrame:
+def _embed_delta(wh: Warehouse, batch_size: int) -> DataFrame:
     """embed's work-list + chunk/embed/pool transform, as a lazy frame.
     Reads only columns no other stage's merge writes after summarize's
     (url/source/content/n_chars + the summary/embedding status
     predicates), so it is safe to materialize concurrently with tts's
     merge (see run_until_drained)."""
-    articles = wh.read(ARTICLES)
-    work = _work_barrier(
-        articles.filter(
-            F.col("summary_status").isNotNull() & F.col("embedding_status").isNull()
-        )
-        .orderBy(F.desc("n_chars"), F.asc("url"))
-        .limit(batch_size)
+    work = _work_list(
+        wh.read(ARTICLES),
+        F.col("summary_status").isNotNull() & F.col("embedding_status").isNull(),
+        batch_size,
     )
     chunked = work.select(
         "url", "source", F.posexplode(chunk_fixed_expr(F.col("content"))).alias("pos", "chunk")
     )
     emb = chunked.select(
-        "url", "source", hash_embed_expr(F.col("chunk"), dims).alias("vector")
+        "url", "source", hash_embed_expr(F.col("chunk"), EMBED_DIMS).alias("vector")
     )
     return mean_pool(emb, ["url", "source"], "vector", out_col="vector").withColumn(
         "point_id", F.md5(F.col("url"))
     )
 
 
-def embed_batch(
-    wh: Warehouse, batch_size: int = 100, dims: int = 16, *, precounted=None
-) -> JobResult:
+def embed_batch(wh: Warehouse, batch_size: int = 100, *, precounted=None) -> JobResult:
     """Work-list P3 (summarized, not embedded) → chunk → embed → mean-pool
     → merge vectors into ``embeddings`` (K5) and flip ``embedding_status``
     (K3).  Failed rows would keep NULL status and be retried by the next
@@ -447,17 +450,11 @@ def embed_batch(
         status = p.select(
             "url", "source", F.lit("completed").alias("embedding_status")
         )
-        wh.merge_update(
-            status, ARTICLES, ["url"], ["embedding_status"],
-            partition_by=PARTITION, partition_rows=pr,
-        )
+        _update_articles(wh, ["embedding_status"])(status, pr)
 
-    n = _merge_batch(
-        _embed_delta(wh, batch_size, dims) if precounted is None else None,
-        merge,
-        partition_by=PARTITION,
-        precounted=precounted,
-    )
+    if precounted is None:
+        precounted = _count_phase(_embed_delta(wh, batch_size))
+    n = _merge_batch(precounted, merge)
     return JobResult("embed", n)
 
 
@@ -468,10 +465,7 @@ def relate_batch(
     wh: Warehouse,
     *,
     batch_size: int = 200,
-    k: int = 5,
-    ttl_days: int = 1,
     min_eligible: int = 0,
-    dims: int = 16,
     barrier=None,
 ) -> JobResult:
     """Work-list P4 (embedded ∧ (no related_ids ∨ stale)) with the T5 gate,
@@ -481,9 +475,9 @@ def relate_batch(
     K3 merge stamping ``related_ids_updated_at``."""
     articles = wh.read(ARTICLES)
     stale = F.col("related_ids_updated_at") < F.current_timestamp() - F.expr(
-        f"INTERVAL {ttl_days} DAYS"
+        f"INTERVAL {RELATED_TTL_DAYS} DAYS"
     )
-    eligible = articles.filter(
+    predicate = (
         (F.col("embedding_status") == "completed")
         # never-related (NULL) or past TTL.  An EMPTY related_ids result
         # is deliberately NOT re-queued before its TTL: it is a terminal
@@ -496,11 +490,9 @@ def relate_batch(
     )
     # gate count only when a threshold is set — the default (0) skips the
     # extra job over the articles scan entirely
-    if min_eligible and eligible.count() < min_eligible:
+    if min_eligible and articles.filter(predicate).count() < min_eligible:
         return JobResult("relate", 0)
-    work = _work_barrier(
-        eligible.orderBy(F.desc("n_chars"), F.asc("url")).limit(batch_size)
-    )
+    work = _work_list(articles, predicate, batch_size)
 
     emb = wh.read(EMBEDDINGS)
     queries = work.select("url").join(emb, "url").select(
@@ -529,8 +521,8 @@ def relate_batch(
     # auto-tier's metadata-pruned df.count() produced, without the
     # ~0.3 s Spark job it scheduled per relate call.
     ranked = related_topk(
-        queries, corpus, scores, k_candidates=k + 1, k_final=k,
-        tier="auto", dims=dims, queries_n=batch_size,
+        queries, corpus, scores, k_candidates=RELATED_K + 1, k_final=RELATED_K,
+        tier="auto", dims=EMBED_DIMS, queries_n=batch_size,
         corpus_n=wh.table_rows(EMBEDDINGS),
     )
     # collect_list order is not preserved across the groupBy shuffle —
@@ -560,16 +552,8 @@ def relate_batch(
         )
     )
     n = _merge_batch(
-        related,
-        lambda r, pr: wh.merge_update(
-            r,
-            ARTICLES,
-            ["url"],
-            ["related_ids", "related_ids_updated_at"],
-            partition_by=PARTITION,
-            partition_rows=pr,
-        ),
-        partition_by=PARTITION,
+        _count_phase(related),
+        _update_articles(wh, ["related_ids", "related_ids_updated_at"]),
         barrier=barrier,
     )
     return JobResult("relate", n)
@@ -592,20 +576,16 @@ def tts_batch(wh: Warehouse, batch_size: int = 100, *, barrier=None) -> JobResul
     operators/tts.py:upload_audio_sink with its pytest contract."""
     from briefly_spark.operators.tts import gender_voice, synthesize_speech
 
-    articles = wh.read(ARTICLES)
-    work = _work_barrier(
-        articles.filter(
-            F.col("summary_status").isNotNull()
-            & (F.col("male_audio_id").isNull() | F.col("female_audio_id").isNull())
-        )
-        .orderBy(F.desc("n_chars"), F.asc("url"))
-        .limit(batch_size)
-        .select(
-            "url",
-            "source",
-            "article_id",
-            F.array_join("summary", "\n").alias("summary_text"),
-        )
+    work = _work_list(
+        wh.read(ARTICLES),
+        F.col("summary_status").isNotNull()
+        & (F.col("male_audio_id").isNull() | F.col("female_audio_id").isNull()),
+        batch_size,
+    ).select(
+        "url",
+        "source",
+        "article_id",
+        F.array_join("summary", "\n").alias("summary_text"),
     )
     # work feeds BOTH join branches (the Arrow synthesis side and the
     # url/source hydration side) — persist so the articles work-list scan
@@ -624,16 +604,8 @@ def tts_batch(wh: Warehouse, batch_size: int = 100, *, barrier=None) -> JobResul
             ).alias("female_audio_id"),
         )
         n = _merge_batch(
-            delta,
-            lambda d, pr: wh.merge_update(
-                d,
-                ARTICLES,
-                ["url"],
-                ["male_audio_id", "female_audio_id"],
-                partition_by=PARTITION,
-                partition_rows=pr,
-            ),
-            partition_by=PARTITION,
+            _count_phase(delta),
+            _update_articles(wh, ["male_audio_id", "female_audio_id"]),
             barrier=barrier,
         )
     finally:
@@ -650,7 +622,6 @@ def stream_ingest(
     src_path: str,
     *,
     checkpoint: str,
-    max_files_per_trigger: int | None = None,
 ) -> None:
     """The reference's polling sensor (sensors/article_sensors.py:13-16) as
     a checkpointed Structured Streaming pass: new document files →
@@ -670,9 +641,7 @@ def stream_ingest(
         return b
 
     merge_stream(
-        read_parquet_stream(
-            spark, src_path, max_files_per_trigger=max_files_per_trigger
-        ),
+        read_parquet_stream(spark, src_path),
         wh,
         ARTICLES,
         ["url"],
@@ -750,31 +719,37 @@ def run_until_drained(
     sequential recompute, which by the work-lists' total order and the
     column-disjointness above selects the same rows."""
     results: list[JobResult] = []
+    # every prefetch started; the finally joins and drops the ones no stage
+    # took — the next-round curate batch once the drain converges, or any
+    # pending batch when a stage raises
+    prefetches: list[_Prefetch] = []
+
+    def prefetch(fn) -> _Prefetch:
+        prefetches.append(_Prefetch(fn))
+        return prefetches[-1]
+
     pre_curate: _Prefetch | None = None
-    for _ in range(max_rounds):
-        pre_summ = _Prefetch(
-            lambda: _materialize(_summarize_delta(wh, batch_size), PARTITION)
-        )
-        r_cur = curate_batch(
-            wh, batch_size,
-            prefetched=pre_curate.get() if pre_curate is not None else None,
-            barrier=pre_summ.join,
-        )
-        pre_curate = None
-        r_sum = summarize_batch(wh, batch_size, precounted=pre_summ.get())
-        pre_embed = _Prefetch(
-            lambda: _materialize(_embed_delta(wh, batch_size), PARTITION)
-        )
-        r_tts = tts_batch(wh, batch_size, barrier=pre_embed.join)
-        r_emb = embed_batch(wh, batch_size, precounted=pre_embed.get())
-        pre_curate = _Prefetch(lambda: _curate_work_materialized(wh, batch_size))
-        r_rel = relate_batch(wh, batch_size=batch_size, barrier=pre_curate.join)
-        round_results = [r_cur, r_sum, r_tts, r_emb, r_rel]
-        results.extend(round_results)
-        if all(r.processed < batch_size for r in round_results):
-            break
-    if pre_curate is not None:  # converged: drop the speculative batch
-        pre_curate.discard()
+    try:
+        for _ in range(max_rounds):
+            pre_summ = prefetch(lambda: _materialize(_summarize_delta(wh, batch_size)))
+            r_cur = curate_batch(
+                wh, batch_size,
+                prefetched=pre_curate.take() if pre_curate is not None else None,
+                barrier=pre_summ.join,
+            )
+            r_sum = summarize_batch(wh, batch_size, precounted=pre_summ.take())
+            pre_embed = prefetch(lambda: _materialize(_embed_delta(wh, batch_size)))
+            r_tts = tts_batch(wh, batch_size, barrier=pre_embed.join)
+            r_emb = embed_batch(wh, batch_size, precounted=pre_embed.take())
+            pre_curate = prefetch(lambda: _curate_work_materialized(wh, batch_size))
+            r_rel = relate_batch(wh, batch_size=batch_size, barrier=pre_curate.join)
+            round_results = [r_cur, r_sum, r_tts, r_emb, r_rel]
+            results.extend(round_results)
+            if all(r.processed < batch_size for r in round_results):
+                break
+    finally:
+        for p in prefetches:
+            p.discard()
     return results
 
 

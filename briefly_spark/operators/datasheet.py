@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from briefly_spark.streaming.incremental import run_available_now
+
 #: output schema of the datasheet frame
 SHEET_COLS = ("section", "metric", "k", "value")
 
@@ -353,13 +355,7 @@ def datasheet_stream(
         # it again (review r12)
         wh.merge_upsert(block, registry_table, ["batch_id"])
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 def sql_dataset_datasheet(

@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from briefly_spark.operators.trends import require_int_column
+from briefly_spark.streaming.incremental import run_available_now
 
 #: sub-bucket resolution: M = 2^S bins per octave → ≤ 1/M relative
 #: bracket width.  Part of the registry's on-disk contract — changing it
@@ -258,13 +259,7 @@ def histq_counts_stream(
         if block.take(1):
             wh.merge_upsert(block, registry_table, ["batch_id"])
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from briefly_spark.streaming.incremental import run_available_now
+
 #: default log2(registers) — ~1.6% relative error, ≤ 1.5 KB per sketch
 DEFAULT_LG_K = 12
 
@@ -186,13 +188,7 @@ def topk_stream(
         if block.take(1):
             wh.merge_upsert(block, registry_table, ["batch_id"])
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 def hll_counts_stream(
@@ -222,13 +218,7 @@ def hll_counts_stream(
         if block.take(1):
             wh.merge_upsert(block, registry_table, ["batch_id"])
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 # ---------------------------------------------------------------------------

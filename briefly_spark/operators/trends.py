@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from briefly_spark.streaming.incremental import run_available_now
+
 _INT_TYPES = {"tinyint", "smallint", "int", "integer", "bigint", "long"}
 
 #: exact integer fraction surface emitted per group
@@ -259,13 +261,7 @@ def trend_sums_stream(
         finally:
             block.unpersist()
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 def sql_group_trend(

@@ -378,7 +378,6 @@ class Warehouse:
         key: list[str],
         *,
         partition_by: list[str] | None = None,
-        small_batch: bool = True,
         partition_rows=None,
     ) -> None:
         """``MERGE``: rows matching on ``key`` are replaced wholesale by the
@@ -386,11 +385,9 @@ class Warehouse:
         mongo_io_manager.py:85-89).  Idempotent: re-merging the same batch
         is a no-op.  Plan: target ⟕(left_anti) updates ∪ updates — one join.
 
-        ``small_batch=True`` (the default — every job/stream batch here is
-        work-list-sized) broadcasts the update KEY set into the anti-join;
-        pass ``False`` for a bulk backfill whose key set would not fit an
-        executor (the merge_scd2 ``small_batch`` hazard, review r12) and
-        the join planner (AQE) picks the strategy instead.
+        The update KEY set is always broadcast into the anti-join: every
+        caller merges a work-list-, ingest-slice- or micro-batch-sized
+        batch, whose keys fit an executor.
 
         GROUP-REPLACE CONTRACT (load-bearing, test-pinned): the key need
         not be unique on either side — EVERY target row whose key appears
@@ -420,22 +417,17 @@ class Warehouse:
                 return
             if partition_by:
                 self._merge_upsert_partitioned(
-                    updates, table, key, partition_by, small_batch,
-                    partition_rows=partition_rows,
+                    updates, table, key, partition_by, partition_rows=partition_rows
                 )
                 return
             target = self.read(table)
-            ukeys = updates.select(*key)
-            kept = target.join(
-                F.broadcast(ukeys) if small_batch else ukeys, key, "left_anti"
-            )
+            kept = target.join(F.broadcast(updates.select(*key)), key, "left_anti")
             merged = kept.unionByName(updates, allowMissingColumns=True)
             self._overwrite_locked(merged, table, partition_by=partition_by)
 
     def _merge_upsert_partitioned(
         self, updates: DataFrame, table: str, key: list[str],
-        partition_by: list[str], small_batch: bool = True,
-        partition_rows=None,
+        partition_by: list[str], partition_rows=None,
     ) -> None:
         """Partition-scoped merge: build the merged slice for the affected
         partitions aside (no read-while-overwrite on the live table), then
@@ -451,9 +443,8 @@ class Warehouse:
         cond = self._partition_filter(updates, partition_by, partition_rows)
         if cond is None:
             return
-        ukeys = updates.select(*key)
         kept = target.filter(cond).join(
-            F.broadcast(ukeys) if small_batch else ukeys, key, "left_anti"
+            F.broadcast(updates.select(*key)), key, "left_anti"
         )
         merged = kept.unionByName(updates, allowMissingColumns=True)
         self._swap_partitions(merged, table, partition_by)
@@ -467,9 +458,9 @@ class Warehouse:
         Partition pruning turns it into a directory listing.
 
         ``partition_rows`` lets a caller that already collected the batch's
-        partition tuples (e.g. jobs._merge_batch, whose did-we-find-work
-        count is a groupBy over exactly these columns) pass them in and
-        skip the extra Spark action per merge."""
+        partition tuples (e.g. the jobs layer, whose count phase
+        ``jobs._materialize`` is a groupBy over exactly these columns) pass
+        them in and skip the extra Spark action per merge."""
         parts = (
             partition_rows
             if partition_rows is not None
@@ -587,7 +578,6 @@ class Warehouse:
         set_cols: list[str],
         *,
         partition_by: list[str] | None = None,
-        small_batch: bool = True,
         partition_rows=None,
     ) -> None:
         """``WHEN MATCHED UPDATE SET c = delta.c``: only ``set_cols`` change,
@@ -600,8 +590,8 @@ class Warehouse:
         With ``partition_by`` the update is PARTITION-SCOPED like
         :meth:`merge_upsert`: the delta must carry the partition columns
         (a work batch read from the same table always does), and only the
-        partitions its rows live in are read, rewritten and swapped.
-        ``small_batch`` gates the delta broadcast exactly as in
+        partitions its rows live in are read, rewritten and swapped.  The
+        delta is always broadcast into the join, as the update keys are in
         :meth:`merge_upsert`."""
         if partition_by:
             missing = [c for c in partition_by if c not in delta.columns]
@@ -646,9 +636,7 @@ class Warehouse:
                 ).cast(delta.schema[set_cols[0]].dataType),
             ).otherwise(F.col(f"__new_{set_cols[0]}"))
             d = d.withColumn(f"__new_{set_cols[0]}", guard)
-            joined = target.join(
-                F.broadcast(d) if small_batch else d, key, "left"
-            )
+            joined = target.join(F.broadcast(d), key, "left")
             out_cols = []
             for c in target.columns:
                 if c in set_cols:

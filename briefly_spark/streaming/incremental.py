@@ -118,6 +118,23 @@ def available_now_to_memory(
     return sdf.sparkSession.sql(f"SELECT * FROM {name}")
 
 
+def run_available_now(
+    source: DataFrame, sink: Callable[[DataFrame, int], None], checkpoint: str
+) -> None:
+    """Run ``source`` through the foreachBatch ``sink`` once and wait for it
+    to finish — the trigger and checkpoint policy of every merge stream:
+    ``Trigger.AvailableNow`` drains whatever arrived since the last run
+    (the reference's periodic sweep), and the checkpoint at ``checkpoint``
+    is the cursor that makes source progress exactly-once across runs."""
+    (
+        source.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def merge_stream(
     source: DataFrame,
     wh: Warehouse,
@@ -148,13 +165,7 @@ def merge_stream(
         finally:
             df.unpersist()
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 def audited_merge_stream(
@@ -292,13 +303,7 @@ def audited_merge_stream(
         finally:
             df.unpersist()
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 def scd2_stream(
@@ -334,13 +339,7 @@ def scd2_stream(
                 small_batch=True,  # stream micro-batches are bounded
             )
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 def requeue_quarantine(
@@ -453,13 +452,7 @@ def span_dedup_stream(
             wh.merge_upsert(clean, clean_table, ["id"])
             wh.merge_upsert(delta, registry_table, ["span"])
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 def substring_dedup_stream(
@@ -516,13 +509,7 @@ def substring_dedup_stream(
             clean.unpersist()
             delta.unpersist()
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 def heavy_hitter_stream(
@@ -569,13 +556,7 @@ def heavy_hitter_stream(
         finally:
             summary.unpersist()
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 def heavy_hitters_resolve(
@@ -659,13 +640,7 @@ def nb_counts_stream(
         finally:
             delta.unpersist()
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)
 
 
 def neardup_stream(
@@ -775,10 +750,4 @@ def neardup_stream(
             for f in to_release:
                 f.unpersist()
 
-    q = (
-        source.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(source, sink, checkpoint)

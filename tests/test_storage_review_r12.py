@@ -1,6 +1,6 @@
 """Regression pins for the r12 storage/streaming review closures: the
 live-writer recovery gate, full-depth layout assertion, merge_update
-delta-uniqueness, the small_batch broadcast gate, swap-wreckage-free
+delta-uniqueness, swap-wreckage-free
 layout audits, bucketed-table compaction refusal, and the
 foreign-history verdict re-audit."""
 
@@ -80,25 +80,6 @@ def test_merge_update_refuses_duplicate_delta_keys(spark, tmp_path):
     with pytest.raises(Exception, match="delta keys must be unique"):
         wh.merge_update(dup, "t", ["id"], ["v"])
     assert [(r["id"], r["v"]) for r in wh.read("t").collect()] == [(1, "x")]
-
-
-def test_small_batch_false_merges_without_broadcast(spark, tmp_path):
-    wh = _wh(spark, tmp_path)
-    wh.overwrite(spark.createDataFrame([(1, "x"), (2, "y")], "id LONG, v STRING"), "t")
-    wh.merge_upsert(
-        spark.createDataFrame([(2, "z"), (3, "w")], "id LONG, v STRING"),
-        "t", ["id"], small_batch=False,
-    )
-    assert sorted((r["id"], r["v"]) for r in wh.read("t").collect()) == [
-        (1, "x"), (2, "z"), (3, "w"),
-    ]
-    wh.merge_update(
-        spark.createDataFrame([(1, "q")], "id LONG, v STRING"),
-        "t", ["id"], ["v"], small_batch=False,
-    )
-    assert dict(
-        (r["id"], r["v"]) for r in wh.read("t").collect()
-    )[1] == "q"
 
 
 def test_table_files_skips_swap_wreckage(spark, tmp_path):
