@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from briefly_spark.operators.trends import require_int_column
-from briefly_spark.streaming.incremental import run_available_now
+from briefly_spark.streaming.incremental import merge_block, run_available_now
 
 #: sub-bucket resolution: M = 2^S bins per octave → ≤ 1/M relative
 #: bracket width.  Part of the registry's on-disk contract — changing it
@@ -256,8 +256,7 @@ def histq_counts_stream(
             batch_id=batch_id,
             s=s,
         )
-        if block.take(1):
-            wh.merge_upsert(block, registry_table, ["batch_id"])
+        merge_block(wh, block, registry_table, ["batch_id"])
 
     run_available_now(source, sink, checkpoint)
 

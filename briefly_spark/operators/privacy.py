@@ -25,14 +25,14 @@ Scale (100 TB): the report is ONE hash-aggregate shuffle on the QI key
 with a second group-bounded aggregate.  The work-list joins the
 violating-group frame back to the table on the QI key — AQE plans the
 join side (the violating frame is usually small but CAN be huge when k
-is aggressive; never force a broadcast — the merge_scd2/fk dim=True
-lesson).  NULL QI values group together (SQL GROUP BY semantics) —
-"unknown" is itself a linkable crowd, so this is the conservative
-reading; the work-list and release joins therefore use NULL-SAFE
-equality (``<=>``) so a NULL-keyed sub-k crowd is flagged and suppressed
-exactly like any other (plain ``=`` would silently drop it — ADVICE r11
-#1).  Spark plans ``EqualNullSafe`` as a hash-join key, so the null-safe
-condition costs nothing over the equi-join."""
+is aggressive; never force a broadcast — the fk dim=True lesson, and why
+merge_scd2 leaves its batch join to AQE).  NULL QI values group together
+(SQL GROUP BY semantics) — "unknown" is itself a linkable crowd, so this
+is the conservative reading; the work-list and release joins therefore
+use NULL-SAFE equality (``<=>``) so a NULL-keyed sub-k crowd is flagged
+and suppressed exactly like any other (plain ``=`` would silently drop
+it — ADVICE r11 #1).  Spark plans ``EqualNullSafe`` as a hash-join key,
+so the null-safe condition costs nothing over the equi-join."""
 
 from __future__ import annotations
 

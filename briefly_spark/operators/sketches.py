@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from briefly_spark.streaming.incremental import run_available_now
+from briefly_spark.streaming.incremental import merge_block, run_available_now
 
 #: default log2(registers) — ~1.6% relative error, ≤ 1.5 KB per sketch
 DEFAULT_LG_K = 12
@@ -185,8 +185,7 @@ def topk_stream(
         block = topk_batch(
             batch_df, score_col=score_col, id_col=id_col, k=k, batch_id=batch_id
         )
-        if block.take(1):
-            wh.merge_upsert(block, registry_table, ["batch_id"])
+        merge_block(wh, block, registry_table, ["batch_id"])
 
     run_available_now(source, sink, checkpoint)
 
@@ -215,8 +214,7 @@ def hll_counts_stream(
             batch_id=batch_id,
             lg_k=lg_k,
         )
-        if block.take(1):
-            wh.merge_upsert(block, registry_table, ["batch_id"])
+        merge_block(wh, block, registry_table, ["batch_id"])
 
     run_available_now(source, sink, checkpoint)
 

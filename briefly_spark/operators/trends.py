@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from briefly_spark.streaming.incremental import run_available_now
+from briefly_spark.streaming.incremental import merge_block, run_available_now
 
 _INT_TYPES = {"tinyint", "smallint", "int", "integer", "bigint", "long"}
 
@@ -252,14 +252,7 @@ def trend_sums_stream(
             y_col=y_col,
             batch_id=batch_id,
         )
-        # persist: the emptiness probe and the merge would otherwise run
-        # the per-batch sums aggregation twice (review r12)
-        block = block.persist()
-        try:
-            if block.take(1):
-                wh.merge_upsert(block, registry_table, ["batch_id"])
-        finally:
-            block.unpersist()
+        merge_block(wh, block, registry_table, ["batch_id"])
 
     run_available_now(source, sink, checkpoint)
 

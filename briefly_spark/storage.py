@@ -17,12 +17,15 @@ Crash safety: no swap ever deletes live data before its replacement is
 adjacent on the same filesystem.  Partition swaps stage the new version
 under a hidden ``.swap-<token>/`` dir INSIDE the table root, retire the
 old partition into the same dir by rename, commit the new one by rename,
-and only then delete the retired copy; :meth:`read` first completes any
+and only then delete the retired copy.  Recovery (:meth:`_recover`)
+runs on every read (:meth:`read`, :meth:`table_rows`) and on every
+writer-lock acquisition, so any reader or writer first completes an
 interrupted swap it finds (roll forward — the staged data is a full new
-version of its partitions), so a crash at ANY step leaves every partition
-either fully-old or fully-new and the table always readable.  Full-table
-swaps roll forward iff the side write carries Spark's ``_SUCCESS``
-commit marker, else roll back to the retired copy.
+version of its partitions): a crash at ANY step leaves every partition
+either fully-old or fully-new and the table always readable, and no
+writer builds on wreckage.  Full-table swaps roll forward iff the side
+write carries Spark's ``_SUCCESS`` commit marker, else roll back to the
+retired copy.
 
 Concurrency: SINGLE WRITER PER TABLE.  Every mutating method takes a
 pid-stamped lock file (``.<table>.lock``); a second concurrent writer
@@ -49,7 +52,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -128,8 +131,8 @@ class Warehouse:
     def _writer_lock(self, table: str):
         """Pid-stamped exclusive writer lock.  Raises TableLockedError when a
         LIVE process holds it; a dead holder's lock is stolen (crashed
-        writer — its interrupted swap is completed by recovery, not by the
-        lock).
+        writer — its interrupted swap is completed by the :meth:`_recover`
+        that runs right after acquisition, before the caller's body).
 
         Three race windows are closed by construction (review r12 +
         ADVICE r12 #1): the pid is stamped into a private file BEFORE the
@@ -227,6 +230,7 @@ class Warehouse:
                         continue
                     with contextlib.suppress(FileNotFoundError):
                         os.unlink(wreck)
+            self._recover(table)
             yield
         finally:
             with contextlib.suppress(FileNotFoundError):
@@ -268,7 +272,7 @@ class Warehouse:
         retire old by rename, commit new by rename, then delete the retired
         copy.  The one-rename crash window (old retired, new not yet in) is
         closed by :meth:`_recover`: tmp still carries ``_SUCCESS``, so the
-        next read rolls forward."""
+        next read or writer rolls forward."""
         final = self.path(table)
         old = self.path(f".{table}.old-{uuid.uuid4().hex[:8]}")
         if os.path.isdir(final):
@@ -409,45 +413,48 @@ class Warehouse:
         upgrade).  Contract: the key must be partition-stable (a key never
         moves between partition values — e.g. url → ingest date); a key
         that migrated would leave its old copy alive in an untouched
-        partition."""
-        with self._writer_lock(table):
-            self._recover(table)
-            if not self.exists(table):
-                self._overwrite_locked(updates, table, partition_by=partition_by)
-                return
-            if partition_by:
-                self._merge_upsert_partitioned(
-                    updates, table, key, partition_by, partition_rows=partition_rows
+        partition.  The scoping and the swap are :meth:`_keyed_merge`'s."""
+
+        def combine(target: DataFrame) -> DataFrame:
+            kept = target.join(F.broadcast(updates.select(*key)), key, "left_anti")
+            return kept.unionByName(updates, allowMissingColumns=True)
+
+        self._keyed_merge(
+            updates, table, combine, create=True,
+            partition_by=partition_by, partition_rows=partition_rows,
+        )
+
+    def _keyed_merge(
+        self, batch: DataFrame, table: str, combine, *, create: bool,
+        partition_by: list[str] | None = None, partition_rows=None,
+    ) -> None:
+        """The one write path of every keyed merge: under the writer lock,
+        create a missing table from ``batch`` (if ``create``; else the read
+        raises), scope the target, and commit ``combine(target)``.  Flat:
+        the whole table, full-table swap.  With ``partition_by``: the batch
+        must carry the partition columns and the layout must match; only
+        the partitions present in the batch (:meth:`_partition_filter`)
+        are read and swapped, and an empty batch writes nothing."""
+        if partition_by:
+            missing = [c for c in partition_by if c not in batch.columns]
+            if missing:
+                raise ValueError(
+                    f"partition-scoped merge needs partition cols {missing} "
+                    "in the batch"
                 )
+        with self._writer_lock(table):
+            if create and not self.exists(table):
+                self._overwrite_locked(batch, table, partition_by=partition_by)
                 return
             target = self.read(table)
-            kept = target.join(F.broadcast(updates.select(*key)), key, "left_anti")
-            merged = kept.unionByName(updates, allowMissingColumns=True)
-            self._overwrite_locked(merged, table, partition_by=partition_by)
-
-    def _merge_upsert_partitioned(
-        self, updates: DataFrame, table: str, key: list[str],
-        partition_by: list[str], partition_rows=None,
-    ) -> None:
-        """Partition-scoped merge: build the merged slice for the affected
-        partitions aside (no read-while-overwrite on the live table), then
-        atomically swap ONLY those partition directories.
-
-        The affected-partition list is a driver collect of the update
-        batch's distinct partition tuples — bounded by the batch, not the
-        table (a work batch touches a handful of partitions).  The kept
-        scan filters on those values, so partition pruning limits the read
-        to the same handful of directories."""
-        self._assert_partitioned_layout(table, partition_by)
-        target = self.read(table)
-        cond = self._partition_filter(updates, partition_by, partition_rows)
-        if cond is None:
-            return
-        kept = target.filter(cond).join(
-            F.broadcast(updates.select(*key)), key, "left_anti"
-        )
-        merged = kept.unionByName(updates, allowMissingColumns=True)
-        self._swap_partitions(merged, table, partition_by)
+            if not partition_by:
+                self._overwrite_locked(combine(target), table)
+                return
+            self._assert_partitioned_layout(table, partition_by)
+            cond = self._partition_filter(batch, partition_by, partition_rows)
+            if cond is None:
+                return
+            self._swap_partitions(combine(target.filter(cond)), table, partition_by)
 
     def _partition_filter(
         self, batch: DataFrame, partition_by: list[str], partition_rows=None
@@ -458,9 +465,12 @@ class Warehouse:
         Partition pruning turns it into a directory listing.
 
         ``partition_rows`` lets a caller that already collected the batch's
-        partition tuples (e.g. the jobs layer, whose count phase
-        ``jobs._materialize`` is a groupBy over exactly these columns) pass
-        them in and skip the extra Spark action per merge."""
+        partition tuples pass them in and skip the extra Spark action per
+        merge.  Two callers do: the jobs layer, whose count phase
+        ``jobs._materialize`` is a groupBy over exactly these columns, and
+        the streaming sinks' probe-and-merge
+        (``streaming.incremental.merge_block``), whose emptiness probe is
+        the same groupBy."""
         parts = (
             partition_rows
             if partition_rows is not None
@@ -504,8 +514,8 @@ class Warehouse:
         ``.swap-<token>/new/`` dir (pure renames — same filesystem,
         replacement adjacent before anything is touched), then commit via
         :meth:`_complete_swap`.  A crash at any step is finished by the
-        next :meth:`read` — never a lost or half-visible partition."""
-        self._recover(table)  # finish any interrupted predecessor first
+        next :meth:`read` or writer — never a lost or half-visible
+        partition."""
         aside = self.path(f".{table}.merge-{uuid.uuid4().hex[:8]}")
         slice_df = slice_df.hint("rebalance", *partition_by)  # see _overwrite_locked
         slice_df.write.mode("overwrite").partitionBy(*partition_by).parquet(aside)
@@ -592,22 +602,10 @@ class Warehouse:
         (a work batch read from the same table always does), and only the
         partitions its rows live in are read, rewritten and swapped.  The
         delta is always broadcast into the join, as the update keys are in
-        :meth:`merge_upsert`."""
-        if partition_by:
-            missing = [c for c in partition_by if c not in delta.columns]
-            if missing:
-                raise ValueError(
-                    f"partition-scoped merge_update needs partition cols "
-                    f"{missing} in the delta"
-                )
-        with self._writer_lock(table):
-            target = self.read(table)
-            if partition_by:
-                self._assert_partitioned_layout(table, partition_by)
-                cond = self._partition_filter(delta, partition_by, partition_rows)
-                if cond is None:
-                    return
-                target = target.filter(cond)
+        :meth:`merge_upsert`.  A missing table raises: ``$set`` has
+        nothing to update."""
+
+        def combine(target: DataFrame) -> DataFrame:
             d = delta.select(*key, *[F.col(c).alias(f"__new_{c}") for c in set_cols])
             # The left join fans out on duplicate delta keys, silently
             # duplicating target rows (review r12) — refuse.  The guard is
@@ -616,9 +614,7 @@ class Warehouse:
             # first projected column, so no extra Spark action runs per
             # merge (an eager aggregate here cost q128's drain ~2 jobs per
             # stage write-back).
-            from pyspark.sql import Window as _W
-
-            dup_n = F.count(F.lit(1)).over(_W.partitionBy(*key))
+            dup_n = F.count(F.lit(1)).over(Window.partitionBy(*key))
             guard = F.when(
                 dup_n > 1,
                 F.raise_error(
@@ -643,11 +639,12 @@ class Warehouse:
                     out_cols.append(F.coalesce(F.col(f"__new_{c}"), F.col(c)).alias(c))
                 else:
                     out_cols.append(F.col(c))
-            updated = joined.select(*out_cols)
-            if partition_by:
-                self._swap_partitions(updated, table, partition_by)
-            else:
-                self._overwrite_locked(updated, table, partition_by=partition_by)
+            return joined.select(*out_cols)
+
+        self._keyed_merge(
+            delta, table, combine, create=False,
+            partition_by=partition_by, partition_rows=partition_rows,
+        )
 
     # -- SCD2: versioned dimension history (X122) ---------------------------
     def merge_scd2(
@@ -658,7 +655,6 @@ class Warehouse:
         *,
         version: int,
         change_cols: list[str] | None = None,
-        small_batch: bool = False,
     ) -> None:
         """Slowly-changing-dimension type-2 merge: instead of overwriting a
         matched row (merge_upsert) or patching fields in place
@@ -681,12 +677,12 @@ class Warehouse:
         Plan shape: one NULL-safe-equality join of the CURRENT slice
         against the batch, one union of [closed ∪ untouched-current ∪
         history ∪ inserts] written back via write-aside + swap.  The
-        batch side of the join is AQE-planned by default; callers that
-        KNOW the batch is bounded (stream micro-batches, work lists)
-        assert it with ``small_batch=True`` to force a broadcast —
-        an unconditional broadcast would OOM on a large dimension
-        backfill batch (ADVICE r10 #2, the same hazard the fk dim=True
-        gate in expectations.py avoids).  History rows ride through
+        batch side of the join is never force-broadcast: AQE picks the
+        broadcast from the measured batch size (the session's
+        ``autoBroadcastJoinThreshold``), so a bounded micro-batch
+        broadcasts and a large dimension backfill batch cannot OOM one
+        (ADVICE r10 #2, the same hazard the fk dim=True gate in
+        expectations.py avoids).  History rows ride through
         untouched; at 100 TB the history table partitions by
         ``valid_from`` range so the rewrite is recent-partition-scoped
         (the same upgrade path as the other merges — a transactional
@@ -708,12 +704,8 @@ class Warehouse:
             F.lit(None).cast("long").alias("valid_to"),
             F.lit(True).alias("is_current"),
         )
-        with self._writer_lock(table):
-            self._recover(table)
-            if not self.exists(table):
-                self._overwrite_locked(stamped, table)
-                return
-            target = self.read(table)
+
+        def combine(target: DataFrame) -> DataFrame:
             cols = [c for c in target.columns if c not in lineage]
             ccols = change_cols or [c for c in cols if c not in key]
             cur = target.filter(F.col("is_current"))
@@ -724,8 +716,6 @@ class Warehouse:
             probe = updates.select(
                 *key, *[F.col(c).alias(f"__u_{c}") for c in ccols]
             ).withColumn("__hit", F.lit(True))
-            if small_batch:
-                probe = F.broadcast(probe)
             unchanged_pred = F.lit(True)
             for c in ccols:
                 unchanged_pred = unchanged_pred & F.col(c).eqNullSafe(
@@ -750,13 +740,14 @@ class Warehouse:
                 key,
                 "left_anti",
             )
-            out = (
+            return (
                 hist.select(*[F.col(c) for c in cols], *lineage)
                 .unionByName(closed)
                 .unionByName(untouched)
                 .unionByName(changed_or_new.select(*[F.col(c) for c in cols], *lineage))
             )
-            self._overwrite_locked(out, table)
+
+        self._keyed_merge(stamped, table, combine, create=True)
 
     def read_scd2_asof(self, table: str, version: int) -> DataFrame:
         """The dimension as it stood at ``version``: rows whose validity
@@ -899,9 +890,7 @@ class Warehouse:
             .drop("__z", *[f"__min_{c}" for c in cols], *[f"__max_{c}" for c in cols])
         )
         with self._writer_lock(table):
-            tmp = self.path(f".{table}.tmp-{uuid.uuid4().hex[:8]}")
-            staged.write.mode("overwrite").parquet(tmp)
-            self._swap_full(tmp, table)
+            self._overwrite_locked(staged, table)
 
     def compact(self, table: str, *, target_rows_per_file: int) -> int:
         """Rewrite a table into ~evenly-sized files — the small-files
@@ -954,8 +943,8 @@ class Warehouse:
                 # corruption inference-off exists to prevent.  Reading
                 # directly also keeps the inference-off frame OUT of the
                 # memo, so later plain reads never see string-typed
-                # partition columns.  _recover first, as read() would.
-                self._recover(table)
+                # partition columns.  The writer lock already ran
+                # _recover, as read() would.
                 df = self.spark.read.parquet(self.path(table))
                 n = df.count()
                 n_files = max(1, math.ceil(n / target_rows_per_file))

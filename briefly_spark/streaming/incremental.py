@@ -135,6 +135,31 @@ def run_available_now(
     )
 
 
+def merge_block(
+    wh: Warehouse, block: DataFrame, table: str, key: list[str], *,
+    partition_by: list[str] | None = None,
+) -> None:
+    """The streaming sinks' probe-and-merge: persist ``block`` (so the
+    probe and the merge share one evaluation), probe it with ONE action,
+    ``merge_upsert`` it when non-empty, and always unpersist it.  The
+    probe is ``take(1)`` for a flat target and, for a partitioned one, a
+    groupBy-count over ``partition_by`` (the jobs layer's count phase)
+    whose rows go to the merge as ``partition_rows=``."""
+    block = block.persist()
+    try:
+        if partition_by:
+            rows = block.groupBy(*partition_by).count().collect()
+            if rows:
+                wh.merge_upsert(
+                    block, table, key,
+                    partition_by=partition_by, partition_rows=rows,
+                )
+        elif block.take(1):
+            wh.merge_upsert(block, table, key)
+    finally:
+        block.unpersist()
+
+
 def merge_stream(
     source: DataFrame,
     wh: Warehouse,
@@ -154,16 +179,8 @@ def merge_stream(
     micro-batch rewrites only the partitions it touches."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: the probe take(1) and the merge would otherwise run the
-        # transform lineage twice per micro-batch (the heavy_hitter_stream
-        # one-pass discipline; review r12)
         df = (transform(batch_df) if transform else batch_df).dropDuplicates(key)
-        df = df.persist()
-        try:
-            if df.take(1):
-                wh.merge_upsert(df, table, key, partition_by=partition_by)
-        finally:
-            df.unpersist()
+        merge_block(wh, df, table, key, partition_by=partition_by)
 
     run_available_now(source, sink, checkpoint)
 
@@ -332,12 +349,15 @@ def scd2_stream(
     defined order)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        df = transform(batch_df) if transform else batch_df
-        if df.take(1):
-            wh.merge_scd2(
-                df, table, key, version=int(batch_id), change_cols=change_cols,
-                small_batch=True,  # stream micro-batches are bounded
-            )
+        # persist: the probe, the key-uniqueness check and the merge share it
+        df = (transform(batch_df) if transform else batch_df).persist()
+        try:
+            if df.take(1):
+                wh.merge_scd2(
+                    df, table, key, version=int(batch_id), change_cols=change_cols
+                )
+        finally:
+            df.unpersist()
 
     run_available_now(source, sink, checkpoint)
 
@@ -447,10 +467,17 @@ def span_dedup_stream(
             text_col=text_col,
             span_tokens=span_tokens,
         )
-        # claims nonempty ⟺ kept nonempty ⟺ clean nonempty: one guard
-        if clean.take(1):
-            wh.merge_upsert(clean, clean_table, ["id"])
-            wh.merge_upsert(delta, registry_table, ["span"])
+        # persist both: the probe and the merges share one evaluation
+        clean = clean.persist()
+        delta = delta.persist()
+        try:
+            # claims nonempty ⟺ kept nonempty ⟺ clean nonempty: one guard
+            if clean.take(1):
+                wh.merge_upsert(clean, clean_table, ["id"])
+                wh.merge_upsert(delta, registry_table, ["span"])
+        finally:
+            clean.unpersist()
+            delta.unpersist()
 
     run_available_now(source, sink, checkpoint)
 
@@ -494,20 +521,17 @@ def substring_dedup_stream(
         )
         # clean holds EVERY batch doc (zero-coverage docs are full
         # survivors), so the guard is on the batch, not the claims.
-        # Persist both frames: the emptiness probes and the two merges
-        # would otherwise re-run the shared shingle-explode + registry-
-        # join lineage up to four times per micro-batch (the
-        # heavy_hitter_stream one-pass discipline).
+        # Persist both frames (delta inside merge_block): the emptiness
+        # probes and the two merges would otherwise re-run the shared
+        # shingle-explode + registry-join lineage up to four times per
+        # micro-batch (the heavy_hitter_stream one-pass discipline).
         clean = clean.persist()
-        delta = delta.persist()
         try:
             if clean.take(1):
                 wh.merge_upsert(clean, clean_table, ["id"])
-                if delta.take(1):
-                    wh.merge_upsert(delta, registry_table, ["h"])
+                merge_block(wh, delta, registry_table, ["h"])
         finally:
             clean.unpersist()
-            delta.unpersist()
 
     run_available_now(source, sink, checkpoint)
 
@@ -549,12 +573,8 @@ def heavy_hitter_stream(
             .groupBy("term")
             .agg(F.sum("cnt").alias("cnt"))
             .withColumn("batch_id", F.lit(batch_id))
-        ).persist()  # the emptiness probe and the merge share one MG pass
-        try:
-            if summary.take(1):
-                wh.merge_upsert(summary, candidates_table, ["batch_id"])
-        finally:
-            summary.unpersist()
+        )
+        merge_block(wh, summary, candidates_table, ["batch_id"])
 
     run_available_now(source, sink, checkpoint)
 
@@ -626,19 +646,11 @@ def nb_counts_stream(
             n_buckets=n_buckets,
             batch_id=batch_id,
         )
-        # persist: the emptiness probe and the merge share one
-        # tokenize/aggregate pass (the heavy_hitter_stream discipline)
-        delta = delta.persist()
-        try:
-            if delta.take(1):
-                # batch_id ALONE: the group-replace contract (storage.py)
-                # makes a replayed micro-batch replace its ENTIRE prior
-                # contribution — a (batch_id, lab, j) key would let stale
-                # rows whose keys the replay no longer produces survive
-                # and corrupt the count sums
-                wh.merge_upsert(delta, registry_table, ["batch_id"])
-        finally:
-            delta.unpersist()
+        # batch_id ALONE: the group-replace contract (storage.py) makes a
+        # replayed micro-batch replace its ENTIRE prior contribution — a
+        # (batch_id, lab, j) key would let stale rows whose keys the
+        # replay no longer produces survive and corrupt the count sums
+        merge_block(wh, delta, registry_table, ["batch_id"])
 
     run_available_now(source, sink, checkpoint)
 

@@ -222,23 +222,3 @@ def test_scd2_stream_matches_sequential_batches(spark, tmp_path):
     assert len(vers) == 3 and sum(1 for t in vers if t[5]) == 1
     run()  # checkpoint re-run: nothing new
     assert _state(wh) == got
-
-
-def test_scd2_small_batch_broadcast_path_equivalent(spark, tmp_path):
-    """ADVICE r10 #2: the probe broadcast is gated behind the caller's
-    small_batch assertion (default = AQE-planned, so a large dimension
-    backfill batch can't force a broadcast OOM).  Both paths must produce
-    byte-identical tables."""
-    states = []
-    for flag in (False, True):
-        wh = Warehouse(spark, str(tmp_path / f"wh_sb_{flag}"))
-        wh.merge_scd2(
-            _df(spark, [(1, "hanoi", 1), (2, "hue", 2)]), "dim", ["id"],
-            version=1, small_batch=flag,
-        )
-        wh.merge_scd2(
-            _df(spark, [(1, "hanoi", 9), (3, "dalat", 3)]), "dim", ["id"],
-            version=2, small_batch=flag,
-        )
-        states.append(_state(wh))
-    assert states[0] == states[1]

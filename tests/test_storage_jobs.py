@@ -153,6 +153,11 @@ def test_merge_update_partitioned_scopes_to_delta_partitions(spark, tmp_path):
             spark.createDataFrame([(3, "x")], "id long, v string"),
             "t3", ["id"], ["v"], partition_by=["day"],
         )
+    with pytest.raises(ValueError, match="partition cols"):
+        wh.merge_upsert(
+            spark.createDataFrame([(3, "x")], "id long, v string"),
+            "t3", ["id"], partition_by=["day"],
+        )
 
 
 def test_merge_update_only_touches_set_cols(spark, tmp_path):
@@ -559,6 +564,25 @@ def test_full_overwrite_crash_rolls_forward_or_back(spark, tmp_path):
     os.makedirs(wh2.path(".t.tmp-dead"))  # incomplete write, no _SUCCESS
     assert [r["v"] for r in wh2.read("t").collect()] == ["v1"]
     assert not os.path.isdir(wh2.path(".t.tmp-dead"))  # wreckage swept
+
+
+def test_writer_completes_crashed_full_swap_before_writing(spark, tmp_path):
+    """Recovery runs when a writer takes the lock, not only on read: a
+    crashed full-table swap (table dir retired, committed side write left
+    behind) is rolled forward and swept by the next overwrite itself."""
+    import os
+
+    wh = Warehouse(spark, str(tmp_path / "wh_writer_recover"))
+    wh.overwrite(spark.createDataFrame([(1, "v1")], "id long, v string"), "t")
+    spark.createDataFrame([(1, "v2")], "id long, v string").write.parquet(
+        wh.path(".t.tmp-dead")
+    )  # committed: carries _SUCCESS
+    os.rename(wh.path("t"), wh.path(".t.old-dead"))
+    wh.overwrite(spark.createDataFrame([(1, "v3")], "id long, v string"), "t")
+    assert not [
+        d for d in os.listdir(wh.root) if d.startswith((".t.tmp-", ".t.old-"))
+    ]
+    assert [r["v"] for r in wh.read("t").collect()] == ["v3"]
 
 
 def test_partition_merge_refuses_flat_layout(spark, tmp_path):

@@ -824,3 +824,44 @@ def test_requeue_quarantine_crash_between_merge_and_rewrite(spark, tmp_path):
     rows = wh.read("events_live").collect()
     assert sorted((r["ev_id"], r["v"]) for r in rows) == [(1, 10), (2, 20)]
     assert wh.read("q").count() == 0
+
+
+def test_registry_sinks_merge_persisted_blocks(spark, tmp_path, monkeypatch):
+    """The histq, top-k and HLL sinks probe their block before merging it;
+    the block must be persisted, or the probe and the merge each evaluate
+    its aggregation (one micro-batch per sink)."""
+    from briefly_spark.operators.histq import histq_counts_stream
+    from briefly_spark.operators.sketches import hll_counts_stream, topk_stream
+
+    src = tmp_path / "registry_src"
+    spark.createDataFrame(
+        [(i % 3, i, i * 7 % 10) for i in range(30)], "g long, v long, score long"
+    ).coalesce(1).write.parquet(str(src / "b0"))
+    seen = []
+    merge_upsert = Warehouse.merge_upsert
+
+    def recording(self, df, table, *args, **kwargs):
+        seen.append((table, df.is_cached))
+        return merge_upsert(self, df, table, *args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "merge_upsert", recording)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+
+    def source():
+        return read_parquet_stream(spark, str(src) + "/*/")
+
+    histq_counts_stream(
+        source(), wh, registry_table="histq_reg", checkpoint=str(tmp_path / "c_h"),
+        group_cols=["g"], value_col="v",
+    )
+    topk_stream(
+        source(), wh, registry_table="topk_reg", checkpoint=str(tmp_path / "c_t"),
+        score_col="score", id_col="v", k=5,
+    )
+    hll_counts_stream(
+        source(), wh, registry_table="hll_reg", checkpoint=str(tmp_path / "c_l"),
+        group_cols=["g"], value_col="v",
+    )
+    assert sorted(seen) == [
+        ("histq_reg", True), ("hll_reg", True), ("topk_reg", True)
+    ]
